@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{EventOps => E, SyntheticEvents => SE}
+import graft.ops.{EventOps => E, Staged, SyntheticEvents => SE}
 import graft.pipeline.{Curation, Dedup, Multimodal, Retrieval, Similarity, TextStats}
 import graft.queries.{AnalyzeQuery, ExportMissesQuery}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -51,14 +51,9 @@ object SparkEntry {
     * changes cost, never answers. */
   private def dedupArtifacts(s: SparkSession, dir: String)
       : graft.pipeline.DedupArtifacts =
-    graft.pipeline.DedupArtifacts.staged(s, s"$dir|documents|0.3")(
+    Staged(s, s"dedup|$dir|documents|0.3")(
       graft.pipeline.DedupArtifacts.buildPinned(
         table(s, dir, "documents"), "doc_id", "text", threshold = 0.3))
-
-  // keyed by (applicationId, sfDir): localCheckpoint state dies with
-  // the SparkContext (the DedupArtifacts.staged convention)
-  private val covarianceCache =
-    scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
 
   /** The anisotropy audit's shared state: the e17 upper-triangle
     * covariance matrix over `embeddings`, staged ONCE per
@@ -68,15 +63,9 @@ object SparkEntry {
     * spectral question reads the staging table). Both oracles keep
     * their full standalone SQL replays. */
   private def covarianceStaged(s: SparkSession, dir: String): DataFrame =
-    covarianceCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir),
+    Staged(s, s"covariance|$dir")(
       Similarity.covarianceMicro(table(s, dir, "embeddings"),
         "vec_id", "embedding").localCheckpoint())
-
-  // keyed by (applicationId, sfDir): localCheckpoint state dies with
-  // the SparkContext (the DedupArtifacts.staged convention)
-  private val winnowKeysCache =
-    scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
 
   /** The winnowing family's shared state: the (doc, fingerprint-key)
     * frame over `documents` at (k=4, w=5), staged ONCE per
@@ -88,20 +77,9 @@ object SparkEntry {
     * computing its OWN three batch key-frames — the append-only
     * replay equivalence is the thing it tests. */
   private def winnowKeysStaged(s: SparkSession, dir: String): DataFrame =
-    winnowKeysCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir),
+    Staged(s, s"winnowKeys|$dir")(
       Dedup.winnowKeys(table(s, dir, "documents"), "doc_id", "text",
         k = 4, w = 5).localCheckpoint())
-
-  // keyed by (applicationId, sfDir): the winnowKeys discipline.
-  // Deliberately unbounded + never unpersisted (r13 ADVICE,
-  // adjudicated): the gate harness sees at most a handful of sfDirs
-  // per JVM and each entry is a 1024-row checkpointed table; a
-  // long-lived multi-dataset SERVICE embedding this entry should
-  // evict (unpersist + remove) per retired dataset — the cache is a
-  // harness staging convention, not a production artifact store.
-  private val dsirRatiosCache =
-    scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
 
   /** DSIR's trained artifact, staged ONCE per (application, sfDir):
     * the 1024-bucket hashed-bigram log-ratio table between the
@@ -110,12 +88,11 @@ object SparkEntry {
     * scoring (a production run trains the ratio table once per
     * target; every selection pass reads it). */
   private def dsirRatiosStaged(s: SparkSession, dir: String): DataFrame =
-    dsirRatiosCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val docs = table(s, dir, "documents")
-        Curation.dsirLogRatios(docs.filter(col("lang") === "en"),
-          docs, "text", buckets = 1024).localCheckpoint()
-      })
+    Staged(s, s"dsirRatios|$dir") {
+      val docs = table(s, dir, "documents")
+      Curation.dsirLogRatios(docs.filter(col("lang") === "en"),
+        docs, "text", buckets = 1024).localCheckpoint()
+    }
 
   /** d75/d76's shared oracle prefix: the DSIR bigram bucketing, the
     * two bucket distributions (target = lang 'en', raw = all), and
@@ -566,12 +543,6 @@ object SparkEntry {
       .orderBy("q_permille")
   }
 
-  // keyed by (applicationId, sfDir): localCheckpoint state dies with
-  // the SparkContext (the DedupArtifacts.staged convention)
-  private val wordGraphCache =
-    scala.collection.concurrent.TrieMap[(String, String),
-      (DataFrame, DataFrame)]()
-
   /** The word-collocation graph family's shared state: the top-300
     * PMI collocations as 60-bit portable-hash edges plus the word↔id
     * map, staged ONCE per (application, sfDir) and consumed by the
@@ -579,25 +550,24 @@ object SparkEntry {
     * [[dedupArtifacts]] (compute the graph per corpus snapshot,
     * compose reports over it). The k-row PMI result feeds BOTH frames
     * and its lineage is the corpus token scan, so both are pinned
-    * (the round-10 PprRehearsal A/B: 5.1 → 1.9 s at sf0.1,
+    * (PLANS.md "PPR + g8 rehearsal": 5.1 → 1.9 s at sf0.1,
     * labels identical). Returns (edges(id_a, id_b), words(word, id)). */
   private def wordGraph(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    wordGraphCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val pmi = TextStats.pmiCollocations(
-          table(s, dir, "documents"), "doc_id", "text",
-          minCount = 10, k = 300).localCheckpoint()
-        val w1 = element_at(split(col("bigram"), " "), 1)
-        val w2 = element_at(split(col("bigram"), " "), 2)
-        val edges = pmi.select(Dedup.md5Long60(w1).as("id_a"),
-          Dedup.md5Long60(w2).as("id_b")).localCheckpoint()
-        val words = pmi
-          .select(explode(array(w1, w2)).as("word")).distinct()
-          .withColumn("id", Dedup.md5Long60(col("word")))
-          .localCheckpoint()
-        (edges, words)
-      })
+    Staged(s, s"wordGraph|$dir") {
+      val pmi = TextStats.pmiCollocations(
+        table(s, dir, "documents"), "doc_id", "text",
+        minCount = 10, k = 300).localCheckpoint()
+      val w1 = element_at(split(col("bigram"), " "), 1)
+      val w2 = element_at(split(col("bigram"), " "), 2)
+      val edges = pmi.select(Dedup.md5Long60(w1).as("id_a"),
+        Dedup.md5Long60(w2).as("id_b")).localCheckpoint()
+      val words = pmi
+        .select(explode(array(w1, w2)).as("word")).distinct()
+        .withColumn("id", Dedup.md5Long60(col("word")))
+        .localCheckpoint()
+      (edges, words)
+    }
 
   /** The g8/g13/g14 oracle's shared graph derivation: corpus → PMI
     * top-300 → hashed edge list (te normalized, ed both directions)
@@ -1568,7 +1538,7 @@ object SparkEntry {
     // ---- O: sort / export-misses (SURVEY §2.4, §3.2) ------------------
     "o1_sort_misses" -> Q(
       (s, dir) => ExportMissesQuery
-        .run(commits(s, dir), window = false, extraCols = Seq("event_id"))
+        .run(commits(s, dir), extraCols = Seq("event_id"))
         .limit(1000),
       Some(s"""$commitsCte,
               |m AS (SELECT event_id,
@@ -1590,7 +1560,7 @@ object SparkEntry {
     "k1_csv_roundtrip" -> Q(
       (s, dir) => {
         val report = ExportMissesQuery
-          .run(commits(s, dir), window = false, extraCols = Seq("event_id"))
+          .run(commits(s, dir), extraCols = Seq("event_id"))
           .limit(1000)
         val outDir = java.nio.file.Files
           .createTempDirectory("graft_k1").toFile
@@ -8614,8 +8584,8 @@ object SparkEntry {
     // bit-exact ranks, different PLAN: only nonzero-rank rows ride the
     // per-round join (a zero rank contributes exactly 0 to the inflow
     // sum, so dropping the rows is arithmetic identity), unreached
-    // nodes report 0 through one final node-sized left join. The
-    // round-10 ring rehearsal measured 6.8x on a 50M-edge graph where
+    // nodes report 0 through one final node-sized left join. PLANS.md
+    // "PPR + g8 rehearsal" measured 6.8x on a 50M-edge graph where
     // the 3-hop frontier was 7 nodes; this entry keeps the path under
     // a driver-checked oracle (the q17b/q17c twin convention: the
     // oracle pins that plan choice never moves the answer).
@@ -10756,7 +10726,7 @@ object SparkEntry {
       Some(duckDominantDirSqlWith(withDelta = true))),
 
     // e19 at the PRODUCTION WIDTH, driver-verified (r13 verdict task
-    // 5 — the DominantDirectionRehearsal promoted to an oracle
+    // 5 — PLANS.md "e19 scale rehearsal" promoted to an oracle
     // entry): d = 1024, a width e18's driver form REFUSES, over a
     // deterministic synthetic covariance planted in-plan as the
     // d(d+1)/2 upper-triangle cell frame e17 would produce:

@@ -65,9 +65,6 @@ object LoggerConfig {
         "key_action", "input_buffer", "candidates", "first_candidate",
         "has_menu"))))
 
-  val Presets: Map[String, LoggerPreset] =
-    Seq(Normal, Developer, Advanced).map(p => p.name -> p).toMap
-
   private val presetChoiceRe: Regex =
     """local\s+preset_choice\s*=\s*"([^"]+)"""".r
 

@@ -273,19 +273,7 @@ object DistributedSelect {
                               valueCol: String, weightCol: String,
                               q: Double, buckets: Int = 128,
                               threshold: Long = 100000,
-                              maxGroups: Int = 100000): DataFrame =
-    groupedWeightedQuantileWithRounds(df, groupCol, valueCol,
-      weightCol, q, buckets, threshold, maxGroups)._1
-
-  /** [[groupedWeightedQuantile]] plus the SHARED scan-round count —
-    * the number the rehearsal pins: rounds = max over groups of
-    * log_B(n_g/threshold), not the sum. */
-  private[graft] def groupedWeightedQuantileWithRounds(
-      df: DataFrame, groupCol: String,
-      valueCol: String, weightCol: String,
-      q: Double, buckets: Int = 128,
-      threshold: Long = 100000,
-      maxGroups: Int = 100000): (DataFrame, Int) = {
+                              maxGroups: Int = 100000): DataFrame = {
     require(q > 0 && q <= 1, "q must be in (0, 1]")
     require(buckets >= 2, "buckets must be >= 2")
     require(threshold >= 1 && threshold <= Int.MaxValue,
@@ -431,7 +419,7 @@ object DistributedSelect {
     // filter ever strands a pending group with no crossing row, fail
     // with the group/range/rank in the message, not a bare
     // NoSuchElementException from a Map.
-    (state.toSeq.map { case (g, s) =>
+    state.toSeq.map { case (g, s) =>
       val v = s.resolved.getOrElse(resolvedTail.getOrElse(g,
         throw new IllegalStateException(
           s"groupedWeightedQuantile: bounded resolve found no crossing " +
@@ -440,7 +428,7 @@ object DistributedSelect {
             "FP boundary drift between cell assignment and resolve")))
       (g, v, totals(g), ks(g))
     }.sortBy(_._1)
-      .toDF(groupCol, "value", "w_total", "k"), rounds)
+      .toDF(groupCol, "value", "w_total", "k")
   }
 
   /** Exact median absolute deviation — the robust dispersion statistic

@@ -236,8 +236,10 @@ object Eval {
     * (localCheckpoint) frame and keeps the contract loud: past it
     * the input has violated the quantization contract and must fail
     * EARLY, not grind through a corpus-sized "distinct-value" frame
-    * that was supposed to be a summary. DriftRehearsal exercises the
-    * celled path at this cap with planted-truth shift distributions. */
+    * that was supposed to be a summary. PLANS.md "celledCums scale
+    * rehearsal" measured the celled path at this cap with planted-truth
+    * shift distributions; EvalSpec keeps the planted shift and the
+    * past-cap failure as tests. */
   private[graft] val MaxWindowValues: Long = 1L << 22
 
   /** The guarded constant-join key the FromCounts bodies thread their
@@ -1629,28 +1631,6 @@ object Eval {
                         maxBuckets: Int = 8192): DataFrame =
     cusumBinsegFromBuckets(cusumFold(batch, valueMicro, bucket, state,
       maxBuckets))
-
-  /** Streaming CUSUM changepoint monitor: every micro-batch folds its
-    * bucket counts into the standing state and reports the current
-    * changepoint estimate for the stream SO FAR — one
-    * (cp_bucket, n_buckets, cusum, batch_id) row per batch to `sink`.
-    * The sink body IS [[cusumBatchUpdate]], so batch and stream
-    * cannot drift. */
-  def cusumDriftStream(docs: DataFrame, valueMicro: Column,
-                       bucket: Column, maxBuckets: Int = 8192)(
-                       sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      Map[Long, (Long, BigDecimal)]](Map.empty)
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        sink(cusumBatchUpdate(batch, valueMicro, bucket, state,
-            maxBuckets)
-          .withColumn("batch_id", lit(batchId)))
-      }
-      .start()
-  }
 
   /** Binary-segmentation changepoint localization (Scott & Knott's
     * recursion, one level deep) — the MULTI-shift extension of

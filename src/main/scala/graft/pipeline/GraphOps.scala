@@ -97,41 +97,27 @@ object GraphOps {
     * the per-iteration rounding can sustain a small limit cycle
     * instead of reaching delta 0 — measured on the sf0.1 near-dup
     * graph: delta falls 1.1e6 → 4 over ~75 rounds, then cycles at
-    * amplitude 4 forever (HubRehearsal; PLANS.md "Hub-skew
-    * rehearsal"). Production runs should therefore set epsMicro to a
-    * few micro-units (noise-floor scale, ~1e-6 of a unit rank —
-    * far below any ranking decision) rather than 0, and check the
-    * `converged` flag of [[pageRankUntilStats]] instead of trusting
-    * maxIterations. Expected rounds to a target eps:
-    * log(n·1e6/eps)/log(1/damping). */
+    * amplitude 4 forever (PLANS.md "Hub-skew rehearsal"). Production
+    * runs should therefore set epsMicro to a few micro-units
+    * (noise-floor scale, ~1e-6 of a unit rank — far below any ranking
+    * decision) rather than 0, and check the `converged` flag of
+    * [[pageRankUntilRun]] instead of trusting maxIterations. Expected
+    * rounds to a target eps: log(n·1e6/eps)/log(1/damping). */
   def pageRankUntil(pairs: DataFrame, idACol: String, idBCol: String,
                     epsMicro: Long = 0L, maxIterations: Int = 50,
                     damping: Double = 0.85,
                     checkpointEvery: Int = 5): DataFrame =
-    pageRankUntilStats(pairs, idACol, idBCol, epsMicro, maxIterations,
-      damping, checkpointEvery)._1
+    pageRankUntilRun(pairs, idACol, idBCol, epsMicro, maxIterations,
+      damping, checkpointEvery).ranks
 
-  /** [[pageRankUntil]] plus its run stats — (ranks, iterations run,
-    * converged?) — for callers that must DETECT a non-converged run
-    * (the rounding limit cycle under a too-small epsMicro, or
-    * maxIterations hit) instead of silently shipping the last
-    * vector. Per-probe deltas log to stderr under GRAFT_PR_DEBUG=1. */
-  def pageRankUntilStats(pairs: DataFrame, idACol: String,
-                         idBCol: String, epsMicro: Long = 0L,
-                         maxIterations: Int = 50,
-                         damping: Double = 0.85,
-                         checkpointEvery: Int = 5)
-      : (DataFrame, Int, Boolean) = {
-    val r = pageRankUntilRun(pairs, idACol, idBCol, epsMicro,
-      maxIterations, damping, checkpointEvery)
-    (r.ranks, r.iterations, r.converged)
-  }
-
-  /** Full run record of [[pageRankUntilStats]], adding `probes` — the
-    * number of blocking driver convergence checks the run issued, one
-    * per checkpoint round (≈ iterations / checkpointEvery) rather than
-    * one per round. Exposed so the probe-batching contract is
-    * assertable, not just claimed. */
+  /** [[pageRankUntil]] plus its run record — iterations run,
+    * `converged`, and `probes`, the number of blocking driver
+    * convergence checks the run issued (one per checkpoint round,
+    * ≈ iterations / checkpointEvery, rather than one per round) — for
+    * callers that must DETECT a non-converged run (the rounding limit
+    * cycle under a too-small epsMicro, or maxIterations hit) instead
+    * of silently shipping the last vector, and so the probe-batching
+    * contract is assertable, not just claimed. */
   def pageRankUntilRun(pairs: DataFrame, idACol: String,
                        idBCol: String, epsMicro: Long = 0L,
                        maxIterations: Int = 50,
@@ -167,10 +153,6 @@ object GraphOps {
             .as("d"))
           .head()
         converged = delta.isNullAt(0) || delta.getLong(0) <= epsMicro
-        if (sys.env.contains("GRAFT_PR_DEBUG"))
-          System.err.println(s"[pr] it=$it delta=" +
-            (if (delta.isNullAt(0)) "null"
-             else delta.getLong(0).toString))
       }
       ranks = next
     }
@@ -267,7 +249,7 @@ object GraphOps {
     * and 0 terms vanish from the inflow SUM before any rounding), so
     * dropping those rows from the per-round join changes nothing.
     * With seed-local teleport most of a big graph never carries mass
-    * (the round-10 ring rehearsal: a 3-hop frontier of 7 nodes on a
+    * (PLANS.md "PPR + g8 rehearsal": a 3-hop frontier of 7 nodes on a
     * 50M-node cycle — the dense form shuffled all 100M directed edges
     * three times anyway), so each round's join probe collapses from
     * node-sized to frontier-sized; AQE sees the tiny frontier after
@@ -467,7 +449,7 @@ object GraphOps {
     * Shape at scale: identical to the census — degree-ordered wedge
     * enumeration (each triangle materializes exactly once, at its
     * (deg, id)-minimal apex; a 10k-degree hub yields wedges bounded by
-    * its ORIENTED out-degree, the HubRehearsal result), then each
+    * its ORIENTED out-degree, PLANS.md "Hub-skew rehearsal"), then each
     * closed wedge fans out to its 3 member vertices and a map-side
     * combining count folds them. No window anywhere; the explode is
     * 3× the triangle count, not the wedge count. */
@@ -683,8 +665,8 @@ object GraphOps {
     *
     * Shape at scale: triangles enumerate ONCE each at their
     * (degree, id)-minimal apex (the [[localClusteringMicro]] wedge
-    * machinery — hub wedges bounded by oriented out-degree, the
-    * HubRehearsal result), then each closed wedge fans out to its 3
+    * machinery — hub wedges bounded by oriented out-degree, PLANS.md
+    * "Hub-skew rehearsal"), then each closed wedge fans out to its 3
     * member edges carrying the OPPOSITE vertex as the common neighbor;
     * a map-side-combining aggregation on the normalized edge key folds
     * the credits, and the degree frame joins back co-partitioned on

@@ -11,10 +11,8 @@ import org.apache.spark.sql.functions._
   */
 object TextStats {
 
-  /** Whitespace tokenizer (the BPE-ish regex variant splits on
-    * non-word boundaries as well). */
+  /** Whitespace tokenizer. */
   def tokens(text: Column): Column = split(text, " ")
-  def tokensRegex(text: Column): Column = split(text, "\\W+")
 
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
   def distinctTokenCount(text: Column): Column =

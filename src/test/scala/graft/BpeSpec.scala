@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.Bpe
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** BPE merge training against the HAND-COMPUTED textbook sequence
@@ -103,5 +104,23 @@ class BpeSpec extends AnyFunSuite {
     assert(got("lowest") === Seq("l", "o", "w", "est"))
     assert(got("newest") === Seq("n", "ewest"))
     assert(got("w") === Seq("w"))
+  }
+
+  test("planted suffix: round 1 merges (z,z) once per word, round 2 " +
+    "consumes the fresh zz symbol") {
+    // every word is 8 md5-hex chars + "zz", and 'z' occurs nowhere
+    // else: (z,z) is the top pair with count exactly n; next, the
+    // (h8, zz) boundary pairs (~n/16 each) beat the interior hex-hex
+    // pairs (~7n/256 each)
+    val n = 2000L
+    val docs = spark.range(n).select(
+      concat(substring(md5(col("id").cast("string")), 1, 8), lit("zz"))
+        .as("text"))
+    val got = Bpe.trainMerges(docs, "text", 3).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getLong(4)))
+    assert(got.length === 3, got.mkString(","))
+    assert(got.head === ((1L, "z", "z", "zz", n)))
+    assert(got(1)._3 === "zz", got.mkString(","))
   }
 }

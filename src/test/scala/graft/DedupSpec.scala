@@ -935,13 +935,13 @@ class DedupSpec extends AnyFunSuite {
     assert(direct._1.nonEmpty && direct._2.nonEmpty)
     // staged: same key returns the SAME instance (the memoized state);
     // a different key builds fresh
-    DedupArtifacts.clearStaged()
-    val a1 = DedupArtifacts.staged(s, "k1")(
+    graft.ops.Staged.clear()
+    val a1 = graft.ops.Staged(s, "k1")(
       DedupArtifacts.buildPinned(corpus, "doc_id", "text", 0.3))
-    val a2 = DedupArtifacts.staged(s, "k1")(
+    val a2 = graft.ops.Staged[DedupArtifacts](s, "k1")(
       fail("second staged() call with the same key must not rebuild"))
     assert(a1 eq a2)
-    DedupArtifacts.clearStaged()
+    graft.ops.Staged.clear()
     // durable roundtrip: bucketed staging tables reload row-equal, and
     // a components self-join on the bucket key plans exchange-free
     DedupArtifacts.save(pinned, "da_rt", buckets = 4)
@@ -1296,5 +1296,50 @@ class DedupSpec extends AnyFunSuite {
     assert(got(2L)._2 === 0L && !got(2L)._3, got.toString)
     assert(got(3L) === ((2L, 0L, false)), got.toString)
     assert(got(4L) === ((0L, 0L, false)), got.toString)
+  }
+
+  test("dupSpans/spanExcise: a planted 20-word span is found and cut " +
+    "exactly once per host") {
+    val n = 300L
+    val planted = (1 to 20).map(i => s"p$i").mkString(" ")
+    // noise words are 16 md5-hex chars of (id, position): unique per
+    // (doc, position), so the only duplicated 13-grams lie inside P
+    def noise(from: org.apache.spark.sql.Column,
+              len: org.apache.spark.sql.Column) =
+      transform(sequence(from, from + len - 1),
+        i => substring(md5(concat(col("id").cast("string"), lit("-"),
+          i.cast("string"))), 1, 16))
+    // every 10th doc carries P after a (5 + id % 7)-word prefix; every
+    // doc is exactly 45 words
+    val docs = spark.range(n).select(col("id"),
+        (lit(5L) + pmod(col("id"), lit(7L))).as("pre"))
+      .select(col("id"),
+        when(pmod(col("id"), lit(10L)) === 0L,
+          concat_ws(" ",
+            concat_ws(" ", noise(lit(0L), col("pre"))),
+            lit(planted),
+            concat_ws(" ", noise(lit(1000L), lit(25L) - col("pre")))))
+          .otherwise(concat_ws(" ", noise(lit(0L), lit(45L))))
+          .as("text"))
+      .localCheckpoint()
+    val nPlanted = (n + 9L) / 10L
+    val spans = Dedup.dupSpans(docs, "id", "text", n = 13)
+      .localCheckpoint()
+    assert(spans.count() === nPlanted)
+    val bad = spans.filter(
+      col("span_words") =!= 20L ||
+        col("span_start") =!= lit(6L) + pmod(col("id"), lit(7L)) ||
+        col("span_end") =!= lit(25L) + pmod(col("id"), lit(7L)) ||
+        col("span_text") =!= lit(planted) ||
+        pmod(col("id"), lit(10L)) =!= 0L).count()
+    assert(bad === 0L)
+    val agg = Dedup.spanExcise(docs, "id", "text", n = 13).agg(
+        sum(col("n_removed")),
+        sum(when(col("n_spans") > 0, 1L).otherwise(0L)),
+        sum(when(col("n_words") =!= 45L, 1L).otherwise(0L)))
+      .head()
+    assert(agg.getLong(0) === 20L * nPlanted)
+    assert(agg.getLong(1) === nPlanted)
+    assert(agg.getLong(2) === 0L)
   }
 }

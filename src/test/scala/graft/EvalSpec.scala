@@ -1609,6 +1609,20 @@ class EvalSpec extends AnyFunSuite {
     val d = Eval.kmvSetOps(dis, col("u"), col("a"), col("b"),
       k = 64).head()
     assert(d.getLong(3) === 0L && d.getDouble(5) === 0.0)
+    // A = [0, 20000), B = [15000, 35000): union 35000, intersection
+    // 5000. k = 1024 gives ~3% sigma on the union; the intersection
+    // inherits the Jaccard-ratio noise. The md5 hash fixes every
+    // estimate, so the check is deterministic.
+    val (aN, overlap) = (20000L, 5000L)
+    val union = 2 * aN - overlap
+    val ab = spark.range(union).select(col("id").as("u"),
+      (col("id") < aN).as("a"), (col("id") >= aN - overlap).as("b"))
+    val big = Eval.kmvSetOps(ab, col("u"), col("a"), col("b"), k = 1024)
+      .head()
+    assert(big.getLong(2) === union && big.getLong(3) === overlap,
+      big.toString)
+    assert(math.abs(big.getDouble(4) / union - 1.0) < 0.15, big.toString)
+    assert(math.abs(big.getDouble(5) / overlap - 1.0) < 0.30, big.toString)
   }
 
   test("mcnemar: golden counts and the never-disagree contract") {
@@ -1632,5 +1646,64 @@ class EvalSpec extends AnyFunSuite {
     // NULL correctness flags drop (the abstention contract)
     val withNull = run(Seq((T, F), (null, T), (T, null), (F, F)))
     assert(withNull.getLong(0) === 2L && withNull.getLong(1) === 1L)
+  }
+
+  test("driftPanel: a planted uniform shift meets the KS and W1 closed " +
+    "forms exactly") {
+    // A = {1..m}, B = {1+c..m+c}. KS: sup|F_A − F_B| = c/m, so
+    // ks_micro = (1e6·c) div m. W1: the cumulative-count gap sums to
+    // c(c+1)/2 + c(m−c) + c(c−1)/2 = c·m over na·nb = m², so W1 = c
+    // exactly and w1_micro = 1e6·c.
+    val (m, c) = (5000L, 37L)
+    val df = spark.range(m)
+      .select((col("id") + 1L).as("v"), lit(true).as("a"))
+      .unionByName(spark.range(m)
+        .select((col("id") + 1L + c).as("v"), lit(false).as("a")))
+    val panel = Eval.driftPanel(df, col("v"), col("a"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(panel("ks_micro") === ((1000000L * c) / m).toDouble,
+      panel.toString)
+    assert(panel("w1_micro") === (1000000L * c).toDouble, panel.toString)
+    // a shift is drift under every lens; A is stochastically smaller
+    assert(panel("mw_z") < 0.0, panel.toString)
+    assert(panel("ad_micro") > 0.0 && panel("energy_micro") > 0.0,
+      panel.toString)
+  }
+
+  test("ksMicro: one value past MaxWindowValues raises the value " +
+    "cardinality guard") {
+    val over = spark.range(Eval.MaxWindowValues + 1)
+      .select(col("id").as("v"),
+        when(pmod(col("id"), lit(2L)) === 0L, "A").otherwise("B")
+          .as("seg"))
+    val ex = intercept[Exception] {
+      Eval.ksMicro(over, col("v"), col("seg"), "A", "B").collect()
+    }
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).flatMap(e => Option(e.getMessage))
+      .mkString(" | ")
+    assert(msgs.contains("value cardinality"), msgs)
+  }
+
+  test("mannWhitneyU: planted disjoint ranges give u2_a = 2·na·nb, no " +
+    "ties, z > 0 — pooled and per group") {
+    val n = 4000L
+    // every A value (even ids, lifted by n) sits above every B value,
+    // and all pooled values are distinct
+    val df = spark.range(n).select(
+      (col("id") % 21).as("g"),
+      when(col("id") % 2 === 0, col("id") + n).otherwise(col("id"))
+        .cast("double").as("v"),
+      (col("id") % 2 === 0).as("a"))
+    val r = Eval.mannWhitneyU(df, col("v"), col("a")).head()
+    assert(r.getLong(2) === 2L * r.getLong(0) * r.getLong(1), r.toString)
+    assert(r.getLong(3) === 0L && r.getDouble(4) > 0, r.toString)
+    val groups = Eval.groupedMannWhitneyU(df, col("v"), col("a"),
+      col("g")).collect()
+    assert(groups.length === 21)
+    groups.foreach { g =>
+      assert(g.getLong(3) === 2L * g.getLong(1) * g.getLong(2), g.toString)
+      assert(g.getLong(4) === 0L && g.getDouble(5) > 0, g.toString)
+    }
   }
 }

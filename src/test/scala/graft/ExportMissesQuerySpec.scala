@@ -34,14 +34,6 @@ class ExportMissesQuerySpec extends AnyFunSuite {
     assert(got === expected)
   }
 
-  test("window and groupBy+broadcast strategies agree") {
-    val a = ExportMissesQuery.run(commitsDf, window = false)
-      .collect().map(_.toSeq).toSet
-    val b = ExportMissesQuery.run(commitsDf, window = true)
-      .collect().map(_.toSeq).toSet
-    assert(a === b)
-  }
-
   test("export row count equals miss count") {
     import graft.ops.EventOps
     assert(ExportMissesQuery.run(commitsDf).count() ===

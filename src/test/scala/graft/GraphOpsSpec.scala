@@ -529,6 +529,20 @@ class GraphOpsSpec extends AnyFunSuite {
     val empty = run(pairs())
     assert(empty.getLong(0) === 0L && empty.getLong(1) === 0L &&
       empty.isNullAt(2), s"empty: $empty")
+    // k disjoint triangles: Q = 1 − 1/k exactly
+    val k = 50L
+    val tri = pairs((0L until k).flatMap { t =>
+      Seq((3 * t, 3 * t + 1), (3 * t, 3 * t + 2), (3 * t + 1, 3 * t + 2))
+    }: _*)
+    val m = run(tri)
+    // S = 6k, Σm_c = 3k, Σd_c² = 36k through the operator's own
+    // one-division contract
+    val s6k = 6.0 * k
+    val wantQ = BigDecimal((2 * s6k * (3 * k) - 36 * k) / (s6k * s6k))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(m.getLong(0) === 3 * k && m.getLong(1) === k, m.toString)
+    assert(m.getDouble(2) === wantQ, m.toString)
+    assert(wantQ === 1.0 - 1.0 / k)
   }
 
   test("degreeAssortativity: golden paths, degenerate NULL, normalization") {
@@ -760,5 +774,116 @@ class GraphOpsSpec extends AnyFunSuite {
     val got = GraphOps.louvainOneLevel(pairs((7L, 3L)), "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got === Map(3L -> 3L, 7L -> 3L), got.toString)
+  }
+
+  test("hub skew beyond wedges: a welded star keeps LPA leaves agreeing, " +
+    "adds no supported edge, and lowers assortativity") {
+    type DF = org.apache.spark.sql.DataFrame
+    // clean graph: disjoint cliques of sizes 3, 4 and 5 — each clique
+    // is degree-homogeneous, so the clean graph is assortative
+    val clean = (0 until 30).flatMap { c =>
+      val size = 3 + c % 3
+      val base = 100L * c
+      for (i <- 0 until size; j <- i + 1 until size)
+        yield (base + i, base + j)
+    }
+    val hubId = 90000L
+    val star = (1L to 200L).map(i => (hubId, hubId + i))
+    val hubbed = pairs(clean ++ star: _*)
+    // a star is bipartite, so hub and leaves may swap labels each
+    // synchronous round; the leaves see the same neighborhood and
+    // must agree, so the star carries at most two labels
+    val lpa = GraphOps.labelPropagation(hubbed, "id_a", "id_b", 3)
+      .localCheckpoint()
+    def labels(from: Long) =
+      lpa.filter(col("id") >= from).select("label").distinct().count()
+    assert(labels(hubId + 1) === 1L)
+    assert(labels(hubId) <= 2L)
+    // the degree orientation points every leaf edge at the hub: a
+    // triangle-free star adds no supported edge
+    def supported(df: DF) = GraphOps.edgeEmbeddedness(df, "id_a", "id_b")
+      .filter(col("cn_cnt") > 0).count()
+    assert(supported(hubbed) === supported(pairs(clean: _*)))
+    // a pure star is perfectly disassortative; welding one on lowers r
+    def r(df: DF) = GraphOps.degreeAssortativity(df, "id_a", "id_b")
+      .head().getDouble(1)
+    assert(r(pairs(star: _*)) === -1.0)
+    assert(r(hubbed) < r(pairs(clean: _*)))
+  }
+
+  test("personalizedPageRank: hub-seeded leaves tie, a disconnected star " +
+    "changes no clean rank, ring ranks follow the closed-form recurrence") {
+    def ppr(p: org.apache.spark.sql.DataFrame, seed: Long,
+            iterations: Int = 10, sparse: Boolean = false) =
+      ranks(GraphOps.personalizedPageRankMicro(p, "id_a", "id_b",
+        seeds = Seq(seed), iterations = iterations, sparse = sparse))
+    val clique1 = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
+    val clique2 = for (a <- 5L to 8L; b <- (a + 1) to 8L) yield (a, b)
+    val clean = clique1 ++ clique2 :+ (4L, 5L)
+    val hubId = 1000L
+    val hubbed = pairs(clean ++ (1L to 50L).map(i => (hubId, hubId + i)): _*)
+    // hub-seeded: every leaf sees the same neighborhood, one rank
+    val hubSeeded = ppr(hubbed, hubId)
+    val leafRanks = hubSeeded.filter(_._1 > hubId).values.toSet
+    assert(leafRanks.size === 1 && leafRanks.head > 0L, hubSeeded.toString)
+    assert(ppr(hubbed, hubId, sparse = true) === hubSeeded)
+    // seeded in the clean component: clean ranks are unchanged and no
+    // teleport mass leaks into the disconnected star
+    val onHubbed = ppr(hubbed, 1L)
+    assert(onHubbed.filter(_._1 < hubId) === ppr(pairs(clean: _*), 1L))
+    assert(onHubbed.filter(_._1 >= hubId).values.sum === 0L)
+    // an n-ring seeded at 0: after 3 iterations exactly the 7 nodes
+    // within 3 hops are nonzero, at the integer recurrence by hop
+    // distance (degree 2 everywhere, the same div/round discipline)
+    val n = 100L
+    val ring = pairs((0L until n).map(i => (i, (i + 1) % n)): _*)
+    val damping = 0.85
+    val base = math.round((1.0 - damping) * 1e6)
+    var r = Map(0L -> 1000000L).withDefaultValue(0L)
+    for (_ <- 1 to 3)
+      r = (0L to 3L).map { d =>
+        val inflow =
+          if (d == 0) 2L * (r(1L) / 2L) else r(d - 1) / 2L + r(d + 1) / 2L
+        d -> (math.round(damping * inflow) + (if (d == 0) base else 0L))
+      }.toMap.withDefaultValue(0L)
+    val want = (for (d <- 0L to 3L; id <- Set(d, (n - d) % n)
+      if r(d) > 0L) yield id -> r(d)).toMap
+    assert(want.size === 7)
+    Seq(false, true).foreach { sparse =>
+      assert(ppr(ring, 0L, iterations = 3, sparse = sparse)
+        .filter(_._2 > 0L) === want, s"sparse=$sparse")
+    }
+  }
+
+  test("louvainConverged: planted cliques bridged in matched pairs — " +
+    "fixpoint under the cap, Q non-decreasing, one row per node") {
+    // C 10-node cliques; cliques 2t and 2t+1 share one bridge edge
+    val (cComm, sz) = (16, 10)
+    val n = cComm.toLong * sz
+    val clique = for (c <- 0 until cComm; a <- 0 until sz;
+                      b <- a + 1 until sz)
+      yield (c.toLong * sz + a, c.toLong * sz + b)
+    val bridges = (0 until cComm / 2)
+      .map(t => (2L * t * sz, (2L * t + 1) * sz))
+    val p = pairs(clique ++ bridges: _*)
+    val e = GraphOps.normalizedEdges(p, "id_a", "id_b")
+    val runs = Seq(1, 2, 8).map { l =>
+      val lab = GraphOps.louvainConverged(p, "id_a", "id_b", maxLevels = l)
+        .localCheckpoint()
+      // labels compose level over level; they never add rows
+      assert(lab.count() === n, s"L=$l")
+      val q = GraphOps.modularityOfLabels(e,
+          lab.select(col("id"), col("community").as("label")))
+        .head().getAs[Double]("modularity")
+      (q, lab.select(max(col("n_levels"))).head().getLong(0),
+        lab.select(countDistinct(col("community"))).head().getLong(0))
+    }
+    runs.zip(runs.tail).foreach { case (a, b) =>
+      assert(b._1 >= a._1, runs.toString)
+    }
+    val (qFin, levelsFin, nCommFin) = runs.last
+    assert(levelsFin < 8, runs.toString)
+    assert(qFin >= 0.85, runs.toString)
+    assert(nCommFin >= cComm / 4 && nCommFin <= 2L * cComm, runs.toString)
   }
 }

@@ -202,6 +202,27 @@ class MisraGriesSpec extends AnyFunSuite {
         (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
     assert(withNull === Map(Some("a") -> Some(5L), None -> None),
       withNull.toString)
+    // 20 hitters hh_0..hh_19 with exactly n/50 occurrences each (40%
+    // of the stream) interleaved with singleton noise; the exact
+    // counts come from the plant, not from a groupBy
+    val n = 50000L
+    val items = spark.range(n).select(
+      when(pmod(col("id"), lit(50L)) < 20,
+        concat(lit("hh_"), pmod(col("id"), lit(50L))))
+        .otherwise(concat(lit("t_"), col("id"))).as("item"))
+    val hhCms = HeavyHitters.countMinTable(items, col("item"), depth = 4,
+      width = 1024)
+    val planted = spark.range(20).select(
+      concat(lit("hh_"), col("id")).as("item"),
+      lit(n / 50L).as("exact_count"))
+    val est = HeavyHitters.countMinEstimates(hhCms, planted, col("item"),
+        depth = 4, width = 1024)
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
+    assert(est.length === 20)
+    est.foreach { case (item, (exact, e)) =>
+      assert(e >= exact, s"CMS undercounted $item: $e < $exact")
+      assert(e - exact <= 8L * n / 1024, s"$item overcount ${e - exact}")
+    }
   }
 
   test("countMin is LINEAR: batch cell tables summed equal one-shot") {

@@ -735,4 +735,43 @@ class SimilaritySpec extends AnyFunSuite {
       "vec_id", "embedding").queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), plan)
   }
+
+  test("dominant direction at a width the driver form refuses: the " +
+    "distributed form recovers a planted rank-1 spike") {
+    // C = a·uuᵀ + b·I in integer micro: the diagonal shift keeps u the
+    // dominant eigenvector with λ = a·|u|² + b. u's components come
+    // from a Knuth multiplicative hash (reproducible, no randomness).
+    val d = 260
+    val u = Array.tabulate(d) { j =>
+      val h = (j * 2654435761L) & 0xffffL
+      (h.toDouble / 65535.0 - 0.5) * 2.0
+    }
+    val (a, b) = (0.04, 0.001)
+    val cov = spark.range(d.toLong)
+      .select(col("id").as("i"), typedlit(u.toSeq).as("u"))
+      .select(col("i"), explode(expr(s"sequence(i, ${d - 1})")).as("j"),
+        col("u"))
+      .select(col("i"), col("j"), lit(1L).as("n_vecs"),
+        round(lit(1e6) * (lit(a) *
+          element_at(col("u"), col("i").cast("int") + 1) *
+          element_at(col("u"), col("j").cast("int") + 1) +
+          when(col("i") === col("j"), lit(b)).otherwise(lit(0.0))))
+          .cast("long").as("cov_micro"))
+      .localCheckpoint()
+    assert(cov.count() === d.toLong * (d + 1) / 2)
+    val e = intercept[IllegalArgumentException] {
+      Similarity.dominantDirectionFromCov(cov, 5).collect()
+    }
+    assert(e.getMessage.contains("bounded matrix"), e.getMessage)
+    val out = Similarity.dominantDirectionDistributed(cov, iters = 5)
+      .collect()
+    val v = out.sortBy(_.getLong(0)).map(_.getLong(1).toDouble)
+    val cos = math.abs(v.zip(u).map { case (x, y) => x * y }.sum /
+      (math.sqrt(v.map(x => x * x).sum) * math.sqrt(u.map(x => x * x).sum)))
+    val lam = out.head.getLong(2).toDouble / 1e6
+    val lamTrue = a * u.map(x => x * x).sum + b
+    assert(cos > 0.999, s"planted direction not recovered: cos=$cos")
+    assert(out.head.getLong(3) < 10000L, s"not converged: ${out.head}")
+    assert(math.abs(lam - lamTrue) / lamTrue < 0.02, s"$lam vs $lamTrue")
+  }
 }
